@@ -1,20 +1,26 @@
 package graft.metrics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.model.GraphOps
 
 /** Centrality measures (reference L6: benchmark.py:73-107, all computed
   * via NetworkX on the driver). Spark disposition:
   *
-  *  - degree: one hash aggregate (A1).
   *  - Below `broadcastEdgeMax` edges the graph fits a driver/broadcast
-  *    CSR and every measure runs as cheap in-memory passes parallelized
-  *    over sources (the standard distributed-Brandes layout: exact,
-  *    embarrassingly parallel; the reference itself caps betweenness at
-  *    n<5000, run_benchmarks.py:311-313).
-  *  - Above it, `all` routes to distributed implementations: GraphX
-  *    PageRank, DataFrame power iteration for eigenvector, and
+  *    CSR. Degree comes from the CSR offsets, pagerank and eigenvector
+  *    from driver power loops, and closeness, betweenness and load from
+  *    ONE fused kernel ([[bfsMeasuresCsr]]): one BFS per source and one
+  *    backward pass computing all three, parallel over sources (the
+  *    standard distributed-Brandes layout: exact, embarrassingly
+  *    parallel; the reference itself caps betweenness at n<5000,
+  *    run_benchmarks.py:311-313). Each task folds its sources into dense
+  *    accumulators and the driver sums them in partition-index order, so
+  *    the values depend on neither task completion order nor core count.
+  *    No shuffle; the result is one local frame.
+  *  - Above it, `all` routes to distributed implementations: a
+  *    DataFrame power iteration for pagerank and eigenvector, and
   *    level-synchronous multi-source BFS / Brandes for closeness,
   *    betweenness and load (sources sampled above `sourcesCap`, the
   *    classic Eppstein–Wang / pivot-sampling estimate).
@@ -70,8 +76,12 @@ object Centralities {
   def pageRankCsr(spark: SparkSession,
                   csr: org.apache.spark.broadcast.Broadcast[Csr],
                   alpha: Double = 0.85, tol: Double = 1e-6,
-                  maxIter: Int = 100): DataFrame = {
-    val Csr(n, off, nbr) = csr.value
+                  maxIter: Int = 100): DataFrame =
+    vertexFrame(spark, "pagerank" -> pageRankArr(csr.value, alpha, tol, maxIter))
+
+  private def pageRankArr(g: Csr, alpha: Double = 0.85, tol: Double = 1e-6,
+                          maxIter: Int = 100): Array[Double] = {
+    val Csr(n, off, nbr) = g
     var x = Array.fill(n)(1.0 / n)
     var it = 0
     var done = false
@@ -103,10 +113,19 @@ object Centralities {
       if (err < n * tol) done = true
       it += 1
     }
-    import spark.implicits._
-    spark.sparkContext.parallelize(
-      x.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq)
-      .toDF("id", "pagerank")
+    x
+  }
+
+  /** One local (id, cols...) frame over ids 0 until n from driver
+    * arrays: no job, no shuffle; consumers join on `id`. */
+  private def vertexFrame(spark: SparkSession,
+                          cols: (String, Array[Double])*): DataFrame = {
+    val schema = StructType(StructField("id", LongType, nullable = false) +:
+      cols.map(c => StructField(c._1, DoubleType, nullable = false)))
+    val n = cols.head._2.length
+    val rows = java.util.Arrays.asList(Array.tabulate(n)(i =>
+      Row.fromSeq(i.toLong +: cols.map(_._2(i)))): _*)
+    spark.createDataFrame(rows, schema)
   }
 
   /** nx.pagerank semantics, DISTRIBUTED: the same damped power
@@ -213,13 +232,14 @@ object Centralities {
     // capped at `spark.graft.adjMaxChunk` neighbors (default 2²² ≈
     // 32 MB of longs per buffer worst-case — bounded, spillable-scale;
     // far above any bench graph, so locally every vertex keeps exactly
-    // one chunk and the plan is unchanged): a hub's arcs hash-split
-    // into ceil(deg/cap) chunk rows, each carrying the FULL degree for
-    // the contribution division, and the per-dst sum is
-    // chunking-invariant (same multiset of v/deg terms). The route is
-    // decided by a degree probe that runs ONLY when the free upper
-    // bound (total arcs) exceeds the cap — a graph whose whole arc
-    // count fits one chunk cannot contain a hub that doesn't.
+    // one chunk and the plan is unchanged): a hub's arcs split into
+    // ceil(deg/cap) chunk rows of at most cap arcs each, each carrying
+    // the FULL degree for the contribution division, and the per-dst
+    // sum is chunking-invariant (same multiset of v/deg terms). The
+    // route is decided by a degree probe that runs ONLY when the free
+    // upper bound (total arcs) exceeds the cap — a graph whose whole
+    // arc count fits one chunk cannot contain a hub that doesn't
+    // ([[adjacencyArrays]]).
     //
     // 2·m is known without a pass over the arrays (every edge is two
     // arcs), so the BUILD runs data-sized too — the session-wide
@@ -241,38 +261,7 @@ object Centralities {
       // it). The threshold stays finite so the spill path survives
       // (Iterate.withObjectAggHash doc).
       val adjArr = graft.util.Iterate.withObjectAggHash(spark) {
-        val arcs = symmetrize(edges)
-        // degree probe BEFORE the array build: the hazard is the
-        // aggregation buffer itself, so the route must be decided
-        // before any array materializes. m2 (total arcs) is a free
-        // upper bound on every degree — the probe job only runs past
-        // it. One narrow two-stage aggregate (coalesce: null on an
-        // empty graph — r15 ADVICE).
-        lazy val degF = arcs.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        val maxDeg =
-          if (m2 <= maxChunk) m2
-          else degF.agg(coalesce(max(col("deg")), lit(0L))).head.getLong(0)
-        val a = (if (maxDeg <= maxChunk)
-            // no hub exceeds the cap: single-chunk arrays, degree free
-            // as size(nbrs) — no join, no extra shuffle (the measured
-            // fast path; every bench graph takes it)
-            arcs.groupBy(col("src"))
-              .agg(collect_list(col("dst")).as("nbrs"))
-              .select(col("src"), col("nbrs"),
-                size(col("nbrs")).cast("long").as("deg"))
-          else
-            // hub route: hash-split each vertex's arcs into
-            // ceil(deg/cap) chunk rows (integer `div` — SQL `/` on
-            // longs is double division), each carrying the full degree
-            // for the contribution division; the deg join and the
-            // chunked aggregate ride the same src clustering
-            arcs.join(degF, "src")
-              .withColumn("_chunk", pmod(xxhash64(col("dst")),
-                expr(s"(deg + ${maxChunk - 1}) div $maxChunk")))
-              .groupBy(col("src"), col("_chunk"))
-              .agg(collect_list(col("dst")).as("nbrs"),
-                first(col("deg")).as("deg"))
-              .select(col("src"), col("nbrs"), col("deg")))
+        val a = adjacencyArrays(edges, m2, maxChunk)
           .sortWithinPartitions("src")
           .persist()
         a.count()
@@ -309,6 +298,53 @@ object Centralities {
     }
   }
 
+  /** (src, nbrs, deg) adjacency arrays of the undirected graph, every
+    * `nbrs` at most `maxChunk` arcs long; `deg` is the vertex's full
+    * degree on each of its rows and `m2` (2·|edges|) bounds it for free.
+    *
+    * Degree probe BEFORE the array build: the hazard is the aggregation
+    * buffer itself, so the route must be decided before any array
+    * materializes. The probe job only runs when m2 exceeds the cap. One
+    * narrow two-stage aggregate (coalesce: null on an empty graph).
+    *
+    * A hub (deg > cap) splits by each arc's RANK in its sorted arc list:
+    * rank div cap names the chunk, so duplicate arcs of a multigraph hub
+    * get distinct ranks and spread over chunks like any other arc, and
+    * no chunk can exceed the cap (a hash of the endpoint sends every
+    * duplicate to one chunk, and bounds a chunk only on average). The
+    * rank is a one-time spillable sort of the hub rows only, the
+    * randomWalks layout. */
+  private[graft] def adjacencyArrays(edges: DataFrame, m2: Long,
+                                     maxChunk: Int): DataFrame = {
+    val arcs = symmetrize(edges)
+    lazy val degF = arcs.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val maxDeg =
+      if (m2 <= maxChunk) m2
+      else degF.agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0)
+    if (maxDeg <= maxChunk)
+      // no hub exceeds the cap: single-chunk arrays, degree free as
+      // size(nbrs) — no join, no extra shuffle (the measured fast path;
+      // every bench graph takes it)
+      arcs.groupBy(col("src"))
+        .agg(collect_list(col("dst")).as("nbrs"))
+        .select(col("src"), col("nbrs"), size(col("nbrs")).cast("long").as("deg"))
+    else {
+      import org.apache.spark.sql.expressions.Window
+      val withDeg = arcs.join(degF, "src")
+      val small = withDeg.filter(col("deg") <= maxChunk)
+        .groupBy(col("src"))
+        .agg(collect_list(col("dst")).as("nbrs"), first(col("deg")).as("deg"))
+      // integer `div` — SQL `/` on longs is double division
+      val hubs = withDeg.filter(col("deg") > maxChunk)
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy("src").orderBy("dst")).cast("long") - 1)
+        .groupBy(col("src"), expr(s"_rn div $maxChunk").as("_chunk"))
+        .agg(collect_list(col("dst")).as("nbrs"), first(col("deg")).as("deg"))
+        .select(col("src"), col("nbrs"), col("deg"))
+      small.unionByName(hubs)
+    }
+  }
+
   /** Eigenvector centrality by power iteration on the adjacency;
     * falls back to degree centrality on failure (benchmark.py:82-93). */
   def eigenvectorCentrality(spark: SparkSession, edges: DataFrame, n: Long,
@@ -317,32 +353,33 @@ object Centralities {
 
   def eigenvectorCsr(spark: SparkSession, edges: DataFrame,
                      csr: org.apache.spark.broadcast.Broadcast[Csr],
-                     n: Long, iters: Int = 50): DataFrame = {
-    try {
-      val Csr(nn, off, nbr) = csr.value
-      var x = Array.fill(nn)(1.0 / math.sqrt(nn.toDouble))
-      var it = 0
-      while (it < iters) {
-        val y = new Array[Double](nn)
-        var v = 0
-        while (v < nn) {
-          var j = off(v)
-          while (j < off(v + 1)) { y(v) += x(nbr(j)); j += 1 }
-          v += 1
-        }
-        val nrm = math.sqrt(y.map(d => d * d).sum)
-        if (nrm == 0.0) throw new ArithmeticException("zero vector")
-        x = y.map(_ / nrm)
-        it += 1
-      }
-      import spark.implicits._
-      spark.sparkContext.parallelize(
-        x.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq)
-        .toDF("id", "eigenvector")
-    } catch {
-      case _: Exception =>
+                     n: Long, iters: Int = 50): DataFrame =
+    eigenvectorArr(csr.value, iters) match {
+      case Some(x) => vertexFrame(spark, "eigenvector" -> x)
+      case None =>
         degreeCentrality(edges, n).withColumnRenamed("degree_centrality", "eigenvector")
     }
+
+  /** The CSR power iteration; None on a zero vector (no edges), where
+    * callers fall back to degree centrality. */
+  private def eigenvectorArr(g: Csr, iters: Int = 50): Option[Array[Double]] = {
+    val Csr(nn, off, nbr) = g
+    var x = Array.fill(nn)(1.0 / math.sqrt(nn.toDouble))
+    var it = 0
+    while (it < iters) {
+      val y = new Array[Double](nn)
+      var v = 0
+      while (v < nn) {
+        var j = off(v)
+        while (j < off(v + 1)) { y(v) += x(nbr(j)); j += 1 }
+        v += 1
+      }
+      val nrm = math.sqrt(y.map(d => d * d).sum)
+      if (nrm == 0.0) return None
+      x = y.map(_ / nrm)
+      it += 1
+    }
+    Some(x)
   }
 
   /** Distributed eigenvector centrality: DataFrame power iteration
@@ -405,116 +442,129 @@ object Centralities {
 
   /** Closeness centrality, Wasserman–Faust improved form as NetworkX
     * default: C(v) = ((r-1)/(n-1)) * ((r-1)/sum_d) with r = reachable
-    * count. Exact BFS per source, sources distributed. */
+    * count. A projection of the fused kernel [[bfsMeasuresCsr]]. */
   def closeness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
-    closenessCsr(spark, buildBroadcastCsr(spark, edges, n))
+    vertexFrame(spark,
+      "closeness" -> bfsMeasuresCsr(spark, buildBroadcastCsr(spark, edges, n))._1)
 
-  def closenessCsr(spark: SparkSession,
-                   csr: org.apache.spark.broadcast.Broadcast[Csr]): DataFrame = {
+  /** Betweenness centrality — exact Brandes, a projection of the fused
+    * kernel [[bfsMeasuresCsr]]. */
+  def betweenness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
+    vertexFrame(spark,
+      "betweenness" -> bfsMeasuresCsr(spark, buildBroadcastCsr(spark, edges, n))._2)
+
+  /** Load centrality (nx.load_centrality; benchmark.py:105-107), a
+    * projection of the fused kernel [[bfsMeasuresCsr]]. */
+  def load(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
+    vertexFrame(spark,
+      "load" -> bfsMeasuresCsr(spark, buildBroadcastCsr(spark, edges, n))._3)
+
+  /** Driver memory the fused kernel's per-task results may take at once:
+    * every task returns three dense n-arrays of doubles. Well under
+    * Spark's default 1 GB `spark.driver.maxResultSize`. */
+  private val MergeBudgetBytes = 256L << 20
+
+  /** Source partitions of the fused kernel: min(64, n/16), lowered until
+    * parts × 3n × 8 B fits [[MergeBudgetBytes]]. A function of n only,
+    * never of the core count. */
+  private def sourceParts(n: Int): Int =
+    math.max(1L, math.min(math.min(64, n / 16).toLong,
+      MergeBudgetBytes / (24L * math.max(1, n)))).toInt
+
+  /** Closeness, betweenness and load in ONE pass over the broadcast CSR,
+    * as (closeness, betweenness, load) arrays indexed by vertex id.
+    *
+    * Per source: a forward BFS records dist, σ (shortest-path counts),
+    * the number of predecessor arcs and the visit order; closeness comes
+    * from the distance sum and the reach count. One backward pass over
+    * the visit order then accumulates both deltas of each w into its
+    * predecessors — CSR neighbours v with dist(v) = dist(w) − 1, one term
+    * per arc, so a duplicate arc counts twice in σ, in the split and in
+    * the sum:
+    *  - betweenness (Brandes): σ_v/σ_w · (1 + δ_w);
+    *  - load (nx.load_centrality, Newman 2001): (1 + δ_w) split EQUALLY
+    *    among w's predecessors, regardless of each one's path count.
+    *    (nx's `if x == source: break` quirk is unreachable divergence: a
+    *    distance-1 node's only predecessor IS the source, so the skip
+    *    equals excluding flow into the source, which both forms do.)
+    *
+    * Each task folds its sources, in id order, into dense accumulators
+    * (no shuffle); the driver sums the per-task arrays in partition-index
+    * order, so the result is the same whatever order tasks finish in.
+    * Betweenness and load carry nx's normalized form: 2/((n-1)(n-2)) per
+    * unordered pair == ordered delta sum / ((n-1)(n-2)), a division (not
+    * a multiply by the reciprocal) for bit-parity with SQL oracles. */
+  def bfsMeasuresCsr(spark: SparkSession,
+                     csr: org.apache.spark.broadcast.Broadcast[Csr])
+      : (Array[Double], Array[Double], Array[Double]) = {
     val nn = csr.value.n
-    import spark.implicits._
-    spark.sparkContext.parallelize(0 until nn, math.min(64, math.max(1, nn / 16)))
-      .map { s =>
+    val perTask = spark.sparkContext
+      .parallelize(0 until nn, sourceParts(nn))
+      .mapPartitions { sources =>
         val Csr(_, off, nbr) = csr.value
+        val close = new Array[Double](nn)
+        val bet = new Array[Double](nn)
+        val ld = new Array[Double](nn)
         val dist = Array.fill(nn)(-1)
-        var frontier = List(s); dist(s) = 0
-        var sumD = 0L; var reach = 1
-        while (frontier.nonEmpty) {
-          var next = List.empty[Int]
-          frontier.foreach { v =>
+        val sigma = new Array[Double](nn)
+        val npred = new Array[Int](nn)
+        val order = new Array[Int](nn)
+        val db = new Array[Double](nn)
+        val dl = new Array[Double](nn)
+        sources.foreach { s =>
+          dist(s) = 0; sigma(s) = 1.0; order(0) = s
+          var head = 0; var reach = 1; var sumD = 0L
+          while (head < reach) {
+            val v = order(head); head += 1
             var j = off(v)
             while (j < off(v + 1)) {
-              val u = nbr(j)
-              if (dist(u) < 0) { dist(u) = dist(v) + 1; sumD += dist(u)
-                reach += 1; next = u :: next }
+              val w = nbr(j)
+              if (dist(w) < 0) {
+                dist(w) = dist(v) + 1; sumD += dist(w); order(reach) = w; reach += 1
+              }
+              if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); npred(w) += 1 }
               j += 1
             }
           }
-          frontier = next
-        }
-        val c = if (sumD > 0)
-          ((reach - 1).toDouble / (nn - 1)) * ((reach - 1).toDouble / sumD)
-        else 0.0
-        (s.toLong, c)
-      }.toDF("id", "closeness")
-  }
-
-  /** Brandes (betweenness) / Newman equal-split (load) accumulation —
-    * one scaffold, parallel over sources with the CSR broadcast.
-    *
-    * load (nx.load_centrality, Newman 2001): the unit arriving at w is
-    * split EQUALLY among w's predecessors, regardless of each pred's
-    * shortest-path count — vs Brandes' σ_v/σ_w proportional split.
-    * (nx's `if x == source: break` quirk is unreachable divergence:
-    * a distance-1 node's only predecessor IS the source, so the skip
-    * equals excluding flow into the source, which both forms do.) */
-  private def brandesCsr(spark: SparkSession,
-                         csr: org.apache.spark.broadcast.Broadcast[Csr],
-                         loadMode: Boolean, outCol: String): DataFrame = {
-    val nn = csr.value.n
-    import spark.implicits._
-    val partial = spark.sparkContext
-      .parallelize(0 until nn, math.min(64, math.max(1, nn / 16)))
-      .flatMap { s =>
-        val Csr(_, off, nbr) = csr.value
-        val stack = new scala.collection.mutable.ArrayBuffer[Int](nn)
-        val preds = Array.fill(nn)(List.empty[Int])
-        val sigma = new Array[Double](nn); sigma(s) = 1.0
-        val dist = Array.fill(nn)(-1); dist(s) = 0
-        val queue = scala.collection.mutable.Queue(s)
-        while (queue.nonEmpty) {
-          val v = queue.dequeue()
-          stack += v
-          var j = off(v)
-          while (j < off(v + 1)) {
-            val w = nbr(j)
-            if (dist(w) < 0) { dist(w) = dist(v) + 1; queue.enqueue(w) }
-            if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); preds(w) ::= v }
-            j += 1
-          }
-        }
-        val delta = new Array[Double](nn)
-        stack.reverseIterator.foreach { w =>
-          if (preds(w).nonEmpty) {
-            if (loadMode) {
-              val share = (1.0 + delta(w)) / preds(w).size
-              preds(w).foreach(v => delta(v) += share)
-            } else {
-              preds(w).foreach { v =>
-                delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
+          close(s) = if (sumD > 0)
+            ((reach - 1).toDouble / (nn - 1)) * ((reach - 1).toDouble / sumD)
+          else 0.0
+          var k = reach - 1
+          while (k > 0) {
+            val w = order(k)
+            val share = (1.0 + dl(w)) / npred(w)
+            var j = off(w)
+            while (j < off(w + 1)) {
+              val v = nbr(j)
+              if (dist(v) == dist(w) - 1) {
+                db(v) += sigma(v) / sigma(w) * (1.0 + db(w))
+                dl(v) += share
               }
+              j += 1
             }
+            k -= 1
+          }
+          // fold, then reset only what this source touched
+          k = 0
+          while (k < reach) {
+            val v = order(k)
+            if (v != s) { bet(v) += db(v); ld(v) += dl(v) }
+            dist(v) = -1; sigma(v) = 0.0; npred(v) = 0; db(v) = 0.0; dl(v) = 0.0
+            k += 1
           }
         }
-        (0 until nn).iterator.filter(v => v != s && delta(v) != 0.0)
-          .map(v => (v.toLong, delta(v)))
+        Iterator((close, bet, ld))
       }
-      .toDF("id", "d")
-    // nx normalized form 2/((n-1)(n-2)) per unordered pair == ordered
-    // delta sum / ((n-1)(n-2)); expressed as a division (not multiply
-    // by reciprocal) for bit-parity with SQL oracles.
+      .collect()
+    val (close, bet, ld) =
+      (new Array[Double](nn), new Array[Double](nn), new Array[Double](nn))
+    perTask.foreach { case (c, b, l) =>
+      var v = 0
+      while (v < nn) { close(v) += c(v); bet(v) += b(v); ld(v) += l(v); v += 1 }
+    }
     val denom = if (nn > 2) (nn - 1.0) * (nn - 2.0) else 1.0
-    val all = spark.range(nn.toLong).toDF("id")
-    all.join(partial.groupBy("id").agg(sum("d").as("d")), Seq("id"), "left")
-      .select(col("id"), (coalesce(col("d"), lit(0.0)) / denom).as(outCol))
+    (close, bet.map(_ / denom), ld.map(_ / denom))
   }
-
-  /** Betweenness centrality — exact Brandes, parallel over sources. */
-  def betweenness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
-    brandesCsr(spark, buildBroadcastCsr(spark, edges, n), loadMode = false,
-      "betweenness")
-
-  def betweennessCsr(spark: SparkSession,
-                     csr: org.apache.spark.broadcast.Broadcast[Csr]): DataFrame =
-    brandesCsr(spark, csr, loadMode = false, "betweenness")
-
-  /** Load centrality (nx.load_centrality; benchmark.py:105-107). */
-  def load(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
-    brandesCsr(spark, buildBroadcastCsr(spark, edges, n), loadMode = true, "load")
-
-  def loadCsr(spark: SparkSession,
-              csr: org.apache.spark.broadcast.Broadcast[Csr]): DataFrame =
-    brandesCsr(spark, csr, loadMode = true, "load")
 
   // ------------------------------------------------------------------
   // Distributed (past-broadcast-scale) closeness / betweenness / load:
@@ -858,34 +908,45 @@ object Centralities {
       cap.toLong)
   }
 
-  /** All reference centralities (benchmark.py:73-107) in one frame —
-    * now including load. `broadcastEdgeMax` guards the CSR collect:
-    * small graphs share ONE broadcast CSR across pagerank, eigenvector,
-    * closeness, betweenness and load; past it every measure routes to
-    * its distributed implementation. */
+  /** All reference centralities (benchmark.py:73-107) in one frame:
+    * (id, degree_centrality, pagerank, eigenvector, closeness,
+    * betweenness, load), one row per id in [0, n). `broadcastEdgeMax`
+    * guards the CSR collect:
+    *  - at or below it, ONE broadcast CSR feeds everything: degree from
+    *    its offsets, pagerank and eigenvector from the driver loops, and
+    *    closeness, betweenness and load from a single fused pass
+    *    ([[bfsMeasuresCsr]]: one BFS per source, no shuffle, per-task
+    *    results merged in partition-index order). The frame is built
+    *    locally from those arrays — no join;
+    *  - past it every measure routes to its distributed implementation
+    *    and the columns are outer-joined on id.
+    * Either way a NaN or missing value (an isolated vertex's degree on a
+    * one-vertex graph, a vertex absent from a distributed column) reads
+    * 0.0. */
   def all(spark: SparkSession, edges: DataFrame, n: Long,
           broadcastEdgeMax: Long = 10000000L): DataFrame = {
     val m = edges.count()
-    val parts =
-      if (m <= broadcastEdgeMax) {
-        val csr = buildBroadcastCsr(spark, edges, n)
-        Seq(pageRankCsr(spark, csr),
-          eigenvectorCsr(spark, edges, csr, n),
-          closenessCsr(spark, csr),
-          betweennessCsr(spark, csr),
-          loadCsr(spark, csr))
-      } else {
-        // pageRankDistributed (not GraphX static) so pagerank semantics
-        // are route-invariant across the broadcastEdgeMax threshold —
-        // same nx convergence rule as pageRankCsr on both sides; the
-        // three BFS measures share ONE forward BFS + backward pass.
-        val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)
-        Seq(pageRankDistributed(spark, edges, n),
-          eigenvectorDistributed(spark, edges, n),
-          cl, bt, ld)
-      }
-    parts.foldLeft(degreeCentrality(edges, n)) {
-      (acc, df) => acc.join(df, Seq("id"), "outer")
-    }.na.fill(0.0)
+    if (m <= broadcastEdgeMax) {
+      val csr = buildBroadcastCsr(spark, edges, n)
+      val g = csr.value
+      val degree =
+        Array.tabulate(g.n)(v => (g.off(v + 1) - g.off(v)) / (n - 1.0))
+      val (cl, bt, ld) = bfsMeasuresCsr(spark, csr)
+      vertexFrame(spark, "degree_centrality" -> degree,
+        "pagerank" -> pageRankArr(g),
+        "eigenvector" -> eigenvectorArr(g).getOrElse(degree),
+        "closeness" -> cl, "betweenness" -> bt, "load" -> ld).na.fill(0.0)
+    } else {
+      // pageRankDistributed (not GraphX static) so pagerank semantics
+      // are route-invariant across the broadcastEdgeMax threshold —
+      // same nx convergence rule as pageRankCsr on both sides; the
+      // three BFS measures share ONE forward BFS + backward pass.
+      val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)
+      Seq(pageRankDistributed(spark, edges, n),
+        eigenvectorDistributed(spark, edges, n), cl, bt, ld)
+        .foldLeft(degreeCentrality(edges, n)) {
+          (acc, df) => acc.join(df, Seq("id"), "outer")
+        }.na.fill(0.0)
+    }
   }
 }

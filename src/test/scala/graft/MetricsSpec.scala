@@ -378,6 +378,28 @@ class MetricsSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(chunked == base, s"chunked=$chunked base=$base")
     } finally spark.conf.unset(key)
+    // multigraph hub: duplicate arcs take distinct ranks, so they spread
+    // over chunks and no chunk row exceeds the cap. Degrees 8, 4, 2, 1, 1
+    // keep every term dyadic, so the chunked run is EXACT again.
+    val multi = (Seq.fill(4)((0L, 1L)) ++
+      Seq((0L, 2L), (0L, 2L), (0L, 3L), (0L, 4L))).toDF("src", "dst")
+    val arrays = Centralities.adjacencyArrays(multi, m2 = 16, maxChunk = 3)
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
+    assert(arrays.forall(_._2.size <= 3), arrays.map(_._2).mkString(" "))
+    val arcs = multi.collect().flatMap(r =>
+      Seq((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
+    assert(arrays.flatMap(a => a._2.map(a._1 -> _)).sorted.sameElements(arcs.sorted))
+    assert(arrays.forall(a => a._3 == arcs.count(_._1 == a._1)))
+    val multiBase = Centralities.personalizedPageRank(spark, multi, Seq(0L),
+      alpha = 0.5, iters = 2).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    spark.conf.set(key, "3")
+    try {
+      val chunked = Centralities.personalizedPageRank(spark, multi, Seq(0L),
+        alpha = 0.5, iters = 2).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(chunked == multiBase, s"chunked=$chunked base=$multiBase")
+    } finally spark.conf.unset(key)
   }
 
   test("personalizedPageRank: multi-seed mass splits and stays <= 1") {
@@ -412,5 +434,89 @@ class MetricsSpec extends SparkSpec {
     val md = hd.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(md == Map(0L -> 1.5, 1L -> 2.0, 2L -> 1.5))
     hd.unpersist()
+  }
+
+  /** Sequential textbook reference for the fused CSR kernel: per source
+    * a queue BFS with predecessor lists, then Brandes' σ-proportional and
+    * Newman's equal-split accumulation over the stack, and closeness from
+    * the BFS distances (nx's Wasserman–Faust form). Adjacency keeps the
+    * edge order and every duplicate arc, like the CSR. */
+  private def referenceMeasures(n: Int, edges: Seq[(Long, Long)])
+      : (Array[Double], Array[Double], Array[Double]) = {
+    import scala.collection.mutable
+    val adj = Array.fill(n)(mutable.ArrayBuffer.empty[Int])
+    edges.foreach { case (a, b) => adj(a.toInt) += b.toInt; adj(b.toInt) += a.toInt }
+    val close = new Array[Double](n)
+    val bet = new Array[Double](n)
+    val ld = new Array[Double](n)
+    for (s <- 0 until n) {
+      val dist = Array.fill(n)(-1)
+      val sigma = new Array[Double](n)
+      val pred = Array.fill(n)(mutable.ArrayBuffer.empty[Int])
+      var stack = List.empty[Int]
+      val queue = mutable.Queue(s)
+      dist(s) = 0; sigma(s) = 1.0
+      while (queue.nonEmpty) {
+        val v = queue.dequeue()
+        stack ::= v
+        for (w <- adj(v)) {
+          if (dist(w) < 0) { dist(w) = dist(v) + 1; queue.enqueue(w) }
+          if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); pred(w) += v }
+        }
+      }
+      val reached = dist.filter(_ >= 0)
+      val (r, sumD) = (reached.length, reached.map(_.toLong).sum)
+      close(s) = if (sumD > 0)
+        ((r - 1).toDouble / (n - 1)) * ((r - 1).toDouble / sumD) else 0.0
+      val deltaB = new Array[Double](n)
+      val deltaL = new Array[Double](n)
+      for (w <- stack; v <- pred(w)) {
+        deltaB(v) += sigma(v) / sigma(w) * (1.0 + deltaB(w))
+        deltaL(v) += (1.0 + deltaL(w)) / pred(w).size
+      }
+      for (v <- 0 until n if v != s) { bet(v) += deltaB(v); ld(v) += deltaL(v) }
+    }
+    val denom = if (n > 2) (n - 1.0) * (n - 2.0) else 1.0
+    (close, bet.map(_ / denom), ld.map(_ / denom))
+  }
+
+  test("fused CSR centralities: exact vs the sequential reference, distributed route within 1e-9") {
+    // Every graph has fewer than 32 vertices, so the kernel runs its
+    // sources in ONE partition, in id order: the reference's order, so
+    // the match is bit-exact.
+    val graphs: Seq[(String, Int, Seq[(Long, Long)])] = Seq(
+      ("multigraph with duplicate arcs and a self-loop", 6, Seq((0L, 1L), (0L, 1L),
+        (1L, 2L), (2L, 3L), (1L, 3L), (3L, 3L), (3L, 4L), (2L, 4L), (2L, 4L), (4L, 5L))),
+      ("two components and an isolated vertex", 9, Seq((0L, 1L), (1L, 2L), (2L, 0L),
+        (2L, 3L), (5L, 6L), (6L, 7L), (7L, 8L))),
+      ("star", 8, (1L until 8L).map(i => (0L, i))),
+      ("unequal predecessor split", 6, Seq((0L, 1L), (0L, 2L), (1L, 3L), (2L, 3L),
+        (1L, 4L), (4L, 5L), (3L, 5L))))
+    val measures = Seq("degree_centrality", "pagerank", "eigenvector",
+      "closeness", "betweenness", "load")
+    for ((name, n, es) <- graphs) {
+      val g = es.toDF("src", "dst")
+      def byId(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getAs[Long]("id") -> r).toMap
+      val csr = byId(Centralities.all(spark, g, n))
+      assert(csr.keySet == (0L until n).toSet, name)
+      val (cl, bt, ld) = referenceMeasures(n, es)
+      for (v <- 0 until n; (c, ref) <- Seq("closeness" -> cl, "betweenness" -> bt,
+          "load" -> ld))
+        assert(csr(v.toLong).getAs[Double](c) == ref(v),
+          s"$name: $c($v) ${csr(v.toLong).getAs[Double](c)} vs reference ${ref(v)}")
+      // the single-measure entry points are projections of the same kernel
+      for ((c, single) <- Seq("closeness" -> Centralities.closeness(spark, g, n),
+          "betweenness" -> Centralities.betweenness(spark, g, n),
+          "load" -> Centralities.load(spark, g, n)); (id, r) <- byId(single))
+        assert(r.getAs[Double](c) == csr(id).getAs[Double](c), s"$name: $c($id)")
+      val dist = byId(Centralities.all(spark, g, n, broadcastEdgeMax = 0))
+      assert(dist.keySet == csr.keySet, name)
+      for (id <- csr.keys; m <- measures) {
+        val tol = if (m == "eigenvector") 1e-8 else 1e-9
+        val (d, c) = (dist(id).getAs[Double](m), csr(id).getAs[Double](m))
+        assert(math.abs(d - c) <= tol, s"$name: $m($id) distributed $d vs CSR $c")
+      }
+    }
   }
 }
